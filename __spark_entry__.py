@@ -4322,7 +4322,7 @@ sel AS (
 # every DP cell is pred_best + |a_i - b_j| (one IEEE add), coarsening is
 # (x0 + x1) / 2.0, and the path tie order (vertical > horizontal > diagonal,
 # strict < to switch) mirrors functions/dtw_kernel.py::_dtw_with_path /
-# dtw_c's compiled fastdtw_level, so no rounding is needed anywhere.
+# dtw_c's compiled fastdtw_pyramid, so no rounding is needed anywhere.
 # Out-of-window cells use the kernel's own finite-unreachable sentinel
 # (1e18 — any reachable 16-pt cost is astronomically below it).
 
@@ -4457,8 +4457,9 @@ def _fdtw_bt_ctes(lv: int, n: int, m: int) -> str:
 def _fdtw_expand_cte(
     lv: int, n_c: int, n_f: int, m_f: int, a_f: str, b_f: str, feat_src: str
 ) -> str:
-    """Coarse path spans -> fine-level windows (dtw_kernel._expand_batch's
-    interval form of _expand_window): dilate each row span over the
+    """Coarse path spans -> fine-level windows (the interval form of
+    _expand_window shared by dtw_kernel._expand_batch and dtw_c's
+    expand_window): dilate each row span over the
     2*radius+1 surrounding rows on n_c + radius extension rows, pad by
     radius, upsample 2x, clip to [0, m_f - 1]."""
     r = _FDTW_RADIUS

@@ -156,6 +156,56 @@ def test_dtw_properties(a, b):
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.functions import dtw_c
 
 
+def _fastdtw_or_error(A, B, radius, no_cc):
+    """fastdtw_batch on one route; a ValueError is returned, not raised,
+    so both routes can be required to refuse the same inputs."""
+    import os
+
+    if no_cc:
+        os.environ["TSKNN_DTW_NO_CC"] = "1"
+    try:
+        return fastdtw_batch(A, B, radius=radius)
+    except ValueError:
+        return ValueError
+    finally:
+        os.environ.pop("TSKNN_DTW_NO_CC", None)
+
+
+def _assert_routes_equal_on_small_integer_grid(rng, channels):
+    """Compiled pyramid vs the numpy level loop over EVERY (n, m) in
+    1..24 at radius 0..3 (so one side is often shorter than radius + 2).
+    Integer-valued series make every sum exact (halving only adds a few
+    fraction bits), so the numpy scan's reassociation cannot move a value
+    and the two routes must agree bit for bit — including the tie order,
+    since small integers tie constantly. Radius 0 with an odd level
+    length must be refused by both."""
+    for radius in range(4):
+        for n in range(1, 25):
+            for m in range(1, 25):
+                ch = channels(n, m, radius)
+                tail = (ch,) if ch else ()
+                A = rng.integers(-3, 4, size=(3, n) + tail).astype(float)
+                B = rng.integers(-3, 4, size=(3, m) + tail).astype(float)
+                c = _fastdtw_or_error(A, B, radius, no_cc=False)
+                npy = _fastdtw_or_error(A, B, radius, no_cc=True)
+                if c is ValueError or npy is ValueError:
+                    assert c is npy is ValueError and radius == 0, (n, m, ch, radius)
+                else:
+                    assert np.array_equal(c, npy), (n, m, ch, radius, c, npy)
+
+
+def _warped_pairs(rng, count, length):
+    """Noisy sine-shape pairs, each series on its own monotone time warp."""
+    t = np.linspace(0.0, 1.0, length)
+    out = []
+    for _ in range(2 * count):
+        w = rng.uniform(-0.9, 0.9) / np.pi
+        u = t + w * np.sin(np.pi * t)
+        out.append(np.sin(2 * np.pi * 5 * u) + rng.normal(0.0, 0.3, length))
+    X = np.array(out)
+    return X[:count], X[count:]
+
+
 @pytest.mark.skipif(not dtw_c.available(), reason="no C compiler in container")
 def test_c_path_bit_identical_to_per_pair_reference():
     """The compiled kernels run the NATURAL recurrence in the exact op order
@@ -179,13 +229,23 @@ def test_c_path_bit_identical_to_per_pair_reference():
     got = fastdtw_batch(A, B_short, radius=1)
     ref = np.array([fastdtw_pair(a, b, radius=1) for a, b in zip(A, B_short)])
     assert np.array_equal(got, ref)
+    # one compiled call over 64 HAR-length warped pairs
+    A, B = _warped_pairs(np.random.default_rng(31), 64, 561)
+    got = fastdtw_batch(A, B, radius=1)
+    ref = np.array([fastdtw_pair(a, b, radius=1) for a, b in zip(A, B)])
+    assert np.array_equal(got, ref)
 
 
 @pytest.mark.skipif(not dtw_c.available(), reason="no C compiler in container")
 def test_numpy_and_c_routes_agree(monkeypatch):
     """TSKNN_DTW_NO_CC=1 forces the numpy scan path; both routes must agree
     (fastdtw within the documented fp near-tie envelope, exact DTW values
-    allclose since min-reassociation cannot change the exact DP optimum)."""
+    allclose since min-reassociation cannot change the exact DP optimum).
+    On integer-valued series the fastdtw routes must agree EXACTLY over
+    every small shape, radius and (flat or 1-channel) layout."""
+    grid_rng = np.random.default_rng(29)
+    _assert_routes_equal_on_small_integer_grid(grid_rng, lambda n, m, r: 0)
+    _assert_routes_equal_on_small_integer_grid(grid_rng, lambda n, m, r: 1)
     rng = np.random.default_rng(13)
     A = np.cumsum(rng.normal(size=(64, 97)), axis=1)
     B = np.cumsum(rng.normal(size=(64, 97)), axis=1)
@@ -202,6 +262,70 @@ def test_numpy_and_c_routes_agree(monkeypatch):
     # near-tie path flips affect a small minority of pairs, by a bounded amount
     assert (rel > 1e-9).mean() < 0.1
     assert rel.max() < 0.05
+
+
+def test_fastdtw_rejects_bad_radius():
+    """radius < 0 used to hang fastdtw_batch (coarsening never stopped at
+    length 1, memory growing) and recurse fastdtw_pair into RecursionError;
+    a non-integer radius broke the window arithmetic. Both are refused on
+    every route, before any work."""
+    import os
+
+    A = np.arange(12.0).reshape(2, 6)
+    for radius in (-1, -3, 1.5, 1.0, None, True):
+        for no_cc in (False, True):
+            if no_cc:
+                os.environ["TSKNN_DTW_NO_CC"] = "1"
+            try:
+                with pytest.raises(ValueError, match="radius"):
+                    fastdtw_batch(A, A, radius=radius)
+            finally:
+                os.environ.pop("TSKNN_DTW_NO_CC", None)
+        with pytest.raises(ValueError, match="radius"):
+            fastdtw_pair(A[0], A[1], radius=radius)
+    assert fastdtw_batch(A, A, radius=np.int64(2)).tolist() == [0.0, 0.0]
+
+
+_LOW_MEMORY_CHILD = """
+import os, resource, sys
+import numpy as np
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.functions import dtw_c
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.functions.dtw_kernel import fastdtw_batch
+assert dtw_c.available()
+n = 60_000
+t = np.linspace(0.0, 60.0, n)
+A = np.round(8 * np.sin(t))[None, :]
+B = np.round(8 * np.sin(t + 0.3 * np.sin(t / 7)))[None, :]
+limit = 1 << 30
+resource.setrlimit(resource.RLIMIT_AS, (limit, limit))
+c = fastdtw_batch(A, B)
+os.environ["TSKNN_DTW_NO_CC"] = "1"
+npy = fastdtw_batch(A, B)
+print(c[0], npy[0])
+sys.exit(0 if c[0] == npy[0] else 1)
+"""
+
+
+@pytest.mark.skipif(not dtw_c.available(), reason="no C compiler in container")
+def test_c_pyramid_long_pair_under_address_space_limit():
+    """The path-choice scratch is n x W bytes (W = widest window row), not
+    n x m: a 60,000-point pair whose second level alone would need 900 MB
+    as n x m runs under a 1 GiB address-space limit and equals the numpy
+    route (integer-valued, so exactly). Before, the failed malloc made
+    the kernel return without writing, and the caller read np.empty."""
+    import os
+    import subprocess
+    import sys
+
+    env = dict(os.environ, OPENBLAS_NUM_THREADS="1", OMP_NUM_THREADS="1")
+    env.pop("TSKNN_DTW_NO_CC", None)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = root + os.pathsep + env.get("PYTHONPATH", "")
+    r = subprocess.run(
+        [sys.executable, "-c", _LOW_MEMORY_CHILD],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, (r.stdout, r.stderr)
 
 
 def test_c_path_fallback_when_no_compiler(monkeypatch):
@@ -348,6 +472,11 @@ def test_mv_c_numpy_equality_across_lengths_and_channels(monkeypatch):
             np_f = fastdtw_batch(A, B, radius=1)
         rel = np.abs(c_f - np_f) / np.maximum(np_f, 1e-12)
         assert (rel > 1e-9).mean() < 0.1 and rel.max() < 0.05, (n, m, ch)
+    # every (n, m) in 1..24 at radius 0..3, channel counts 2..7 in turn:
+    # exact on integer-valued series (see the 1-ch grid test)
+    _assert_routes_equal_on_small_integer_grid(
+        rng, lambda n, m, r: 2 + (n + m + r) % 6
+    )
 
 
 @pytest.mark.skipif(not dtw_c.available(), reason="no C compiler in container")

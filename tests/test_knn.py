@@ -269,6 +269,26 @@ def test_wrappers_forward_fastdtw_radius(spark):
     assert n > 0
 
 
+def test_knn_join_rejects_bad_fastdtw_radius_on_driver(spark):
+    """A negative radius made fastdtw_batch coarsen forever (it would
+    wedge every Python worker) and a non-integer one breaks the window
+    arithmetic: knn_join refuses both on the driver, on every strategy,
+    before a single job runs."""
+    rows = [(i, [float((i * 3 + j) % 5) for j in range(8)], "a") for i in range(4)]
+    df = spark.createDataFrame(rows, "series_id long, features array<double>, label string")
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "bad_fastdtw_radius")
+    try:
+        for strategy in ("broadcast", "shuffle", "kernel", "chunked", "reverse"):
+            for radius in (-1, 1.5):
+                with pytest.raises(ValueError, match="radius"):
+                    knn_join(df, df, metric="fastdtw", k=1, strategy=strategy,
+                             fastdtw_radius=radius)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("bad_fastdtw_radius")) == []
+
+
 @pytest.mark.slow
 def test_multichannel_knn_strategies_agree(spark):
     """Multichannel series (array<array<double>>) through knn_join: the

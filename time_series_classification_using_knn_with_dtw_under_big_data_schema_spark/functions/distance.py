@@ -22,7 +22,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dtw_kernel import dtw_batch, fastdtw_batch
+from .dtw_kernel import check_fastdtw_radius, dtw_batch, fastdtw_batch
 
 __all__ = [
     "euclidean",
@@ -295,6 +295,7 @@ def make_fastdtw_udf(radius: int = 1) -> Callable[[Column, Column], Column]:
     (dtw_kernel.fastdtw_batch). Data-dependent warp windows mean
     data-dependent cost: near-diagonal warps run ~O(n*radius), adversarial
     warps degrade toward O(n*m) — exactly like the original algorithm."""
+    check_fastdtw_radius(radius)  # on the driver, not in every worker
     return _grouped_pairs_udf(lambda A, B: fastdtw_batch(A, B, radius=radius))
 
 

@@ -12,18 +12,22 @@ radius=1 and default per-point distance = |a-b| (Team11-Project.py:339-341,
   half-resolution coarsening, project the low-res warp path, refine within
   ``radius``. Matches the `fastdtw` PyPI package's algorithm (which the
   reference uses) without depending on it.
-- ``fastdtw_batch``: the SAME faithful algorithm vectorized across a batch
-  of pairs — the production path behind ``metric="fastdtw"``. FastDTW
-  windows are contiguous per DP row and their lows are monotone, so every
-  stage batches: the windowed DP runs the prefix-scan recurrence over
-  per-pair [lo, hi] intervals, path backtracking advances all pairs
-  simultaneously (tie order identical to the per-pair code), and window
-  expansion is a sliding min/max. Pairs are re-bucketed per level by their
-  own max window width so one wide-warp pair (FastDTW's O(n*m) worst case)
-  cannot inflate the whole batch's cost. Distances equal fastdtw_pair's
-  except on fp near-ties of the coarse warp path, where the prefix-scan's
-  reassociated floats may pick the other (equally valid) path — bounded in
-  tests/test_dtw_kernel.py.
+- ``fastdtw_batch``: the SAME faithful algorithm over a batch of pairs —
+  the production path behind ``metric="fastdtw"``. With a C compiler
+  (and fewer than 8 channels) it is ONE call to ``dtw_c.fastdtw_pyramid``,
+  which runs the whole level pyramid per pair in C, bit-identical to
+  fastdtw_pair. Otherwise (no compiler, ``TSKNN_DTW_NO_CC``, ch >= 8) a
+  numpy level loop vectorizes each level across the batch: FastDTW
+  windows are contiguous per DP row and their lows are monotone, so the
+  windowed DP runs the prefix-scan recurrence over per-pair [lo, hi]
+  intervals, path backtracking advances all pairs simultaneously (tie
+  order identical to the per-pair code), and window expansion is a
+  sliding min/max. Pairs are re-bucketed per level by their own max
+  window width so one wide-warp pair (FastDTW's O(n*m) worst case) cannot
+  inflate the whole batch's cost. The numpy route's distances equal
+  fastdtw_pair's except on fp near-ties of the coarse warp path, where the
+  prefix-scan's reassociated floats may pick the other (equally valid)
+  path — bounded in tests/test_dtw_kernel.py.
 - ``dtw_batch``: the production kernel — exact banded DTW vectorized BOTH
   along the DP row and ACROSS a batch of pairs. The classic DP recurrence
   cur[j] = c[j] + min(prev[j], prev[j-1], cur[j-1]) carries a sequential
@@ -42,7 +46,7 @@ import numpy as np
 
 from . import dtw_c
 
-__all__ = ["dtw_pair", "fastdtw_pair", "dtw_batch", "fastdtw_batch"]
+__all__ = ["dtw_pair", "fastdtw_pair", "dtw_batch", "fastdtw_batch", "check_fastdtw_radius"]
 
 _INF = np.inf
 
@@ -151,6 +155,33 @@ def _expand_window(path, len_a, len_b, radius):
     return window
 
 
+def check_fastdtw_radius(radius) -> None:
+    """A FastDTW radius must be a non-negative integer: below 0 the
+    coarsening never stops (min_size = radius + 2 <= 1 keeps halving
+    length-1 series), and the window arithmetic is integer."""
+    if isinstance(radius, bool) or not isinstance(radius, (int, np.integer)):
+        raise ValueError(f"fastdtw radius must be an integer, got {radius!r}")
+    if radius < 0:
+        raise ValueError(f"fastdtw radius must be >= 0, got {radius}")
+
+
+def _check_radius0_lengths(n: int, m: int, radius: int) -> None:
+    """At radius 0 the projected window covers no sample that halving
+    dropped (an odd tail), so whenever a refined level has an odd length
+    the window misses the pair's end cell and no warp path fits it (the
+    reference ``fastdtw`` package fails there too). Depends on the lengths
+    only, so every route raises the same error up front."""
+    if radius != 0:
+        return
+    while n >= 2 and m >= 2:
+        if n % 2 or m % 2:
+            raise ValueError(
+                "fastdtw radius 0 needs lengths that halve evenly down to the "
+                f"coarsest level; got an odd level length ({n}, {m})"
+            )
+        n, m = n // 2, m // 2
+
+
 def _fastdtw_rec(a, b, radius):
     min_size = radius + 2
     if len(a) < min_size or len(b) < min_size:
@@ -164,8 +195,10 @@ def _fastdtw_rec(a, b, radius):
 
 def fastdtw_pair(a, b, radius: int = 1) -> float:
     """FastDTW approximation — reference parity (`fastdtw` package defaults)."""
+    check_fastdtw_radius(radius)
     a = np.asarray(a, dtype=np.float64)
     b = np.asarray(b, dtype=np.float64)
+    _check_radius0_lengths(len(a), len(b), radius)
     dist, _ = _fastdtw_rec(a, b, radius)
     return float(dist)
 
@@ -484,14 +517,23 @@ def _expand_batch(pmin, pmax, n_f, m_f, radius):
 
 
 def fastdtw_batch(A: np.ndarray, B: np.ndarray, radius: int = 1) -> np.ndarray:
-    """Faithful FastDTW over a batch of pairs: (bs, n) x (bs, m) -> (bs,).
+    """Faithful FastDTW over a batch of pairs: (bs, n[, ch]) x (bs, m[, ch])
+    -> (bs,).
 
-    Distances match ``fastdtw_pair`` (and hence the reference's `fastdtw`
-    package) exactly except where the coarse warp path is fp-near-tied —
-    there the prefix-scan's reassociated floats may pick the other equally
-    valid path (bounded in tests). Per-level width re-bucketing keeps a
-    single wide-warp pair from inflating the vectorized cost of the rest.
+    Compiled route (ch < 8): one ``dtw_c.fastdtw_pyramid`` call computes
+    every level of every pair in C; distances equal ``fastdtw_pair`` (and
+    hence the reference's `fastdtw` package) bit for bit. Numpy route (no
+    compiler, ``TSKNN_DTW_NO_CC``, ch >= 8): the level loop below, exact
+    except where the coarse warp path is fp-near-tied — there the
+    prefix-scan's reassociated floats may pick the other equally valid
+    path (bounded in tests). Per-level width re-bucketing keeps a single
+    wide-warp pair from inflating the vectorized cost of the rest.
+
+    ``radius`` must be a non-negative integer; at radius 0 every refined
+    level must have even lengths (see _check_radius0_lengths). Both are
+    refused with ValueError on every route.
     """
+    check_fastdtw_radius(radius)
     A = np.ascontiguousarray(A, dtype=np.float64)
     B = np.ascontiguousarray(B, dtype=np.float64)
     _validate_pair_batch(A, B)
@@ -502,6 +544,13 @@ def fastdtw_batch(A: np.ndarray, B: np.ndarray, radius: int = 1) -> np.ndarray:
         return np.empty(0)
     if n == 0 or m == 0:
         raise ValueError("empty series")
+    _check_radius0_lengths(n, m, radius)
+    if dtw_c.available() and (not mv or A.shape[2] < 8):
+        # Compiled: the whole pyramid per pair in one call, bit-identical
+        # to fastdtw_pair; no width re-bucketing needed (vectorization
+        # across the batch is what made width matter); ch < 8 multichannel
+        # keeps np.sum's op order (see dtw_c.cost_mv)
+        return dtw_c.fastdtw_pyramid(A, B, radius)
     min_size = radius + 2
     levels = [(A, B)]
     while levels[-1][0].shape[1] >= min_size and levels[-1][1].shape[1] >= min_size:
@@ -520,18 +569,6 @@ def fastdtw_batch(A: np.ndarray, B: np.ndarray, radius: int = 1) -> np.ndarray:
             n_f, m_f = levels[li - 1][0].shape[1], levels[li - 1][1].shape[1]
             new_lo = np.empty((bs, n_f), dtype=np.int64)
             new_hi = np.empty((bs, n_f), dtype=np.int64)
-        if dtw_c.available() and (not mv or A.shape[2] < 8):
-            # Compiled per-pair DP + backtrack: no width re-bucketing needed
-            # (vectorization across the batch is what made width matter);
-            # ch < 8 multichannel is bit-identical to numpy (see dtw_c)
-            d, pmin, pmax = dtw_c.fastdtw_level(a_l, b_l, lo, hi, need_path)
-            if need_path:
-                new_lo, new_hi = _expand_batch(pmin, pmax, n_f, m_f, radius)
-            else:
-                dist = d
-            if need_path:
-                lo, hi = new_lo, new_hi
-            continue
         widths = (hi - lo).max(axis=1) + 1
         order = np.argsort(widths, kind="stable")
         start = 0

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.distance import DISTANCES, make_dtw_udf, make_fastdtw_udf, sq_euclidean
+from ..functions.dtw_kernel import check_fastdtw_radius
 from .topk import topk_per_key
 from .vote import majority_vote
 
@@ -128,6 +129,10 @@ def knn_join(
     top-k); only ragged POINT-metric corpora (no cross-length semantics)
     keep the declarative shuffle plan.
     """
+    if metric == "fastdtw":
+        # on the driver, before any job: a bad radius would otherwise
+        # fail (or, negative, never stop coarsening) in every worker
+        check_fastdtw_radius(fastdtw_radius)
     if strategy == "kernel":
         if keep_features:
             raise ValueError("keep_features is not supported with strategy='kernel'")
@@ -421,12 +426,16 @@ def _score_block_rows(
     strategy='chunked' (block cells), so their bit-identity contract is
     enforced by construction instead of by two hand-synced copies.
 
-    fastdtw: chunk several test rows into ONE kernel call. Pair target
-    ~1024 balances ufunc-dispatch amortization against cache footprint:
-    the kernel's (pairs, window) work arrays must share L2/L3 with 31
-    sibling workers, and measured aggregate throughput on 561-pt
-    wide-warp pairs peaks near 1k pairs/call (4k-pair calls were ~20%
-    slower under full contention). The cheap kernels (banded DTW /
+    fastdtw: chunk several test rows into ONE kernel call. The ~1024-pair
+    target matters for the numpy fallback route (no compiler,
+    TSKNN_DTW_NO_CC, ch >= 8): it balances ufunc-dispatch amortization
+    against cache footprint — the numpy level loop's (pairs, window) work
+    arrays must share L2/L3 with 31 sibling workers, and measured
+    aggregate throughput on 561-pt wide-warp pairs peaked near 1k
+    pairs/call (4k-pair calls were ~20% slower under full contention).
+    The compiled route runs the whole pyramid per pair with O(length)
+    scratch, so its cost is per pair and the chunk size barely moves it.
+    The cheap kernels (banded DTW /
     euclidean family) score one test row against the train matrix with
     ZERO-copy views (broadcast_to + b_feats directly) — for them the
     chunked path's np.repeat/np.tile copies cost more than they save.
@@ -452,7 +461,8 @@ def _score_block_rows(
 
     parts_out: list = []
     n_train = len(b_ids)
-    # fastdtw chunks for ufunc amortization; sbd chunks so ONE block FFT
+    # fastdtw chunks for the numpy route's ufunc amortization (the
+    # compiled pyramid is per pair); sbd chunks so ONE block FFT
     # serves many test rows (memory-capped: nc * n_train * 2L doubles).
     # r6: the cheap kernels (banded DTW / euclidean family) now chunk to
     # the same ~1024-pair call target — a no-op in the broadcast-kernel
